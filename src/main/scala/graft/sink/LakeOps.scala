@@ -225,16 +225,14 @@ object LakeOps {
     val df0 = readSnapshot(spark, tableDir, baseId)
     // render partition values back to strings (they were path-rendered
     // on write; partition inference may have re-typed them). No
-    // coalesce(1): writeFiles repartitions on the partition key, which
-    // already yields one file per partition directory (all rows of a
-    // key land in one task) while keeping the rewrite fully parallel —
-    // a single-task funnel here would be the scale bottleneck of the
-    // whole maintenance op.
+    // coalesce(1): writeFiles' hash repartition already yields one file
+    // per partition directory while the rewrite runs on every write
+    // task — a single-task funnel here would be the scale bottleneck of
+    // the whole maintenance op.
     val df = partitionCols.foldLeft(df0)((d, c) => d.withColumn(c, d(c).cast("string")))
-    val written = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
-    val rows = written.map(_._2).sum
+    val (files, rows) = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
     val rec = GraftLog.commitReplacing(tableDir, "rewrite", rows,
-      written.map(_._1).sorted, Seq.empty, baseId, carryAppends = true)
+      files.sorted, Seq.empty, baseId, carryAppends = true)
     CommitInfo(rec.snapshotId, rec.files, rec.rows)
   }
 
@@ -307,14 +305,12 @@ object LakeOps {
         cur.join(up.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
           .unionByName(up, allowMissingColumns = true)
       }
-    val written = HiveParquetWriter.writeFiles(merged, partitionCols, tableDir)
-    // Record.rows = rows written in the rewrite scope (same convention
-    // as compact: writeFiles returns the exact per-staged-file row
-    // counts — read off the parquet footers — and they are summed here;
-    // carried files keep their original rows)
-    val rec = GraftLog.commitReplacing(tableDir, "overwrite", written.map(_._2).sum,
-      (carried ++ written.map(_._1)).sorted, sources, baseId, carryAppends = false)
-    CommitInfo(rec.snapshotId, rec.files, written.map(_._2).sum)
+    // Record.rows = rows written in the rewrite scope, as counted by the
+    // write itself; carried files keep their original rows
+    val (files, rows) = HiveParquetWriter.writeFiles(merged, partitionCols, tableDir)
+    val rec = GraftLog.commitReplacing(tableDir, "overwrite", rows,
+      (carried ++ files).sorted, sources, baseId, carryAppends = false)
+    CommitInfo(rec.snapshotId, rec.files, rows)
   }
 
   /** Directory-name rendering matching the WRITE path exactly:
@@ -377,11 +373,9 @@ object LakeOps {
     try {
       val before = cur.count()
       val survivors = cur.filter(not(hit))
-      val written = HiveParquetWriter.writeFiles(survivors, partitionCols, tableDir)
-      val kept = written.map(_._2).sum
+      val (files, kept) = HiveParquetWriter.writeFiles(survivors, partitionCols, tableDir)
       val rec = GraftLog.commitReplacing(tableDir, "delete", kept,
-        (carried ++ written.map(_._1)).sorted, Seq.empty, baseId,
-        carryAppends = false)
+        (carried ++ files).sorted, Seq.empty, baseId, carryAppends = false)
       CommitInfo(rec.snapshotId, rec.files, before - kept)
     } finally cur.unpersist()
   }
@@ -413,14 +407,12 @@ object LakeOps {
     * zero reads here.
     */
   def fileStats(tableDir: String, column: String): Seq[(String, Option[(Long, Long)])] = {
-    import org.apache.hadoop.conf.Configuration
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = new Configuration()
     GraftLog.liveFiles(tableDir).map { f =>
       val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$tableDir/$f"), conf)
+        new org.apache.hadoop.fs.Path(s"$tableDir/$f"), footerConf)
       val reader = ParquetFileReader.open(in)
       try {
         import scala.jdk.CollectionConverters._

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** One committed append (the observable behavior of the reference's
@@ -43,21 +43,20 @@ trait LakeWriter {
   *    (`String.valueOf(null)`), normalized from Spark's
   *    `__HIVE_DEFAULT_PARTITION__` during publish.
   *
-  * Write path at scale: the caller repartitions by the partition key
-  * first (one shuffle, A17), so each task writes at most a few
-  * partition directories instead of every task writing every partition
-  * — the many-small-files failure mode at 1000 executors.
+  * Write path at scale: `writeFiles` hash-repartitions by the partition
+  * columns into `spark.sql.shuffle.partitions` tasks, so every task
+  * writes in parallel and all rows of one partition value land in one
+  * task — exactly one file per partition directory per append, never
+  * every task writing every partition (the many-small-files failure
+  * mode at 1000 executors).
   */
 final class HiveParquetWriter extends LakeWriter {
 
-  private val NullDir = "__HIVE_DEFAULT_PARTITION__"
-
   override def append(df: DataFrame, partitionCols: Seq[String], tableDir: String,
       sources: Seq[String] = Seq.empty): CommitInfo = {
-    val published = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
-    val rows = published.map(_._2).sum
+    val (files, rows) = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
     if (rows == 0) return CommitInfo(0, Seq.empty, 0) // Q10: empty input → no snapshot
-    val rec = GraftLog.commit(tableDir, "append", rows, published.map(_._1).sorted, sources)
+    val rec = GraftLog.commit(tableDir, "append", rows, files.sorted, sources)
     CommitInfo(rec.snapshotId, rec.files, rows)
   }
 }
@@ -67,65 +66,51 @@ object HiveParquetWriter {
   private val NullDir = "__HIVE_DEFAULT_PARTITION__"
 
   /** Stage + publish data files under `tableDir` (no commit record).
-    * Returns (relative path, exact per-file row count) pairs — counts
-    * read from the staged parquet footers, no counting job.
+    * Returns the published relative paths and the number of rows the
+    * write produced; a 0-row write publishes nothing (Q10).
+    *
+    * The repartition uses an explicit task count: AQE coalesces a
+    * key-only `repartition(cols)` shuffle (a small append collapsed
+    * into ONE write task) but never a `REPARTITION_BY_NUM` one. The row
+    * count is observed AFTER the repartition, i.e. in the write's own
+    * result stage, where each task's count is applied exactly once — no
+    * counting job and no footer reads (the count an Iceberg writer takes
+    * from its tasks' commit messages). The staging directory is removed
+    * on every exit, including a failed write.
     */
   private[sink] def writeFiles(
-      df: DataFrame, partitionCols: Seq[String], tableDir: String): Seq[(String, Long)] = {
+      df: DataFrame, partitionCols: Seq[String], tableDir: String): (Seq[String], Long) = {
     val dir = Paths.get(tableDir)
     Files.createDirectories(dir)
     val staging = dir.resolve(s"_staging_${java.util.UUID.randomUUID()}")
+    val shuffled =
+      if (partitionCols.isEmpty) df
+      else df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        partitionCols.map(col): _*)
+    val written = Observation()
+    try {
+      shuffled.observe(written, count(lit(1)).as("rows"))
+        .write.partitionBy(partitionCols: _*).parquet(staging.toString)
+      val rows = written.get("rows").asInstanceOf[Long]
+      // an all-empty write may still stage a 0-row schema file — it goes
+      // with the staging dir
+      if (rows == 0) return (Seq.empty, 0L)
 
-    val writer =
-      if (partitionCols.nonEmpty)
-        df.repartition(partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
-      else df.write
-    writer.parquet(staging.toString)
-
-    // Row counts come from the staged files' parquet FOOTERS — exact
-    // (a footer's block row counts are the file's row count), read
-    // driver-side without a Spark job. This replaces the former
-    // df.cache().count() pre-pass, which materialized every append
-    // twice (count + write) and paid one extra job per commit (r17
-    // optimization; a cluster deployment would collect the same counts
-    // from the write tasks' commit messages, which is exactly what
-    // Iceberg's commit protocol does).
-    val staged = Files.walk(staging).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq
-    val counted = staged.map(p => p -> parquetRowCount(p))
-    val rows = counted.map(_._2).sum
-    if (rows == 0) { // Q10: nothing to publish (an all-empty write may
-      // still stage a 0-row schema file — drop it with the staging dir)
+      // Publish: move staged data files into the table tree, normalizing
+      // Spark's null-partition dir to the reference's `name=null`.
+      val files = Files.walk(staging).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+        .toSeq
+        .map { p =>
+          val rel = staging.relativize(p).toString.replace(s"=$NullDir", "=null")
+          val target = dir.resolve(rel)
+          Files.createDirectories(target.getParent)
+          Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
+          rel
+        }
+      (files, rows)
+    } finally if (Files.exists(staging))
       Files.walk(staging).sorted(Comparator.reverseOrder[Path]())
         .iterator().asScala.foreach(Files.delete)
-      return Seq.empty
-    }
-
-    // Publish: move staged data files into the table tree, normalizing
-    // Spark's null-partition dir to the reference's `name=null`.
-    val published = counted.map { case (p, n) =>
-      val rel = staging.relativize(p).toString.replace(s"=$NullDir", "=null")
-      val target = dir.resolve(rel)
-      Files.createDirectories(target.getParent)
-      Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-      (rel, n)
-    }
-    Files.walk(staging).sorted(Comparator.reverseOrder[Path]())
-      .iterator().asScala.foreach(Files.delete)
-    published
-  }
-
-  // one shared Configuration: constructing one per file re-parses the
-  // Hadoop XML config set (~10 ms) — measurable against a KB footer read
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
-
-  /** Exact row count of one local parquet file, from its footer. */
-  private def parquetRowCount(p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), footerConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
-    finally r.close()
   }
 }

@@ -97,6 +97,19 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(tableDir).count() == 4) // idempotent re-run
   }
 
+  test("an all-malformed input commits no snapshot and leaves no staging directory (Q10)") {
+    val root = Files.createTempDirectory("graft_bad_").toString
+    val tdir = s"$root/w/t"
+    val comp = Paths.get(root, "events", "bad")
+    Files.createDirectories(comp)
+    Files.writeString(comp.resolve("a.json"), "{\"id\": 1,\n not json\n{{{\n")
+    val r = Pipeline.ingest(spark, root, "bad", IngestQueries.fixtureTable, tdir)
+    assert(r.commit.isEmpty && r.sourceFiles.size == 1)
+    assert(graft.sink.GraftLog.records(tdir).isEmpty)
+    assert(!Files.list(Paths.get(tdir)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith("_staging_")))
+  }
+
   test("reads of the ingested table prune partitions on the partition column") {
     val (_, tableDir) = freshRun()
     val q = spark.read.parquet(tableDir).filter(col("category_identity") === "web")

@@ -23,6 +23,16 @@ class LakeOpsSpec extends SparkSpec {
       .mkString("\n"))
   }
 
+  /** Snapshot `id` records exactly the rows held by the files it added. */
+  private def assertRowsReadBack(tdir: String, id: Long): Unit = {
+    val rec = GraftLog.records(tdir).find(_.snapshotId == id).get
+    val added = GraftLog.liveFiles(tdir, Some(id)).diff(GraftLog.liveFiles(tdir, Some(id - 1)))
+    val readBack =
+      if (added.isEmpty) 0L
+      else spark.read.option("basePath", tdir).parquet(added.map(f => s"$tdir/$f"): _*).count()
+    assert(rec.rows == readBack, s"snapshot $id (${rec.op}) recorded ${rec.rows} rows, its files hold $readBack")
+  }
+
   test("exactly-once: kept sources are not re-ingested on a second run") {
     val root = Files.createTempDirectory("graft_eo_").toString
     val tdir = s"$root/w/t"
@@ -276,6 +286,55 @@ class LakeOpsSpec extends SparkSpec {
     assert(GraftLog.liveFiles(tdir, None).sorted == Seq("a.parquet", "c.parquet"))
   }
 
+  test("an append with more partition keys than shuffle partitions writes on several tasks, one file per directory") {
+    val tdir = Files.createTempDirectory("graft_par_").toString + "/t"
+    val keys = 32
+    assert(keys > spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val df = spark.range(0, 3200).withColumn("k", (col("id") % keys).cast("string"))
+    // stages whose tasks wrote rows, and each completed stage's task count
+    val writeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writeStages.add(e.stageId): Unit
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val c = try {
+      val c = new graft.sink.HiveParquetWriter().append(df, Seq("k"), tdir)
+      // listener events arrive asynchronously; a stage's completion is
+      // posted after all of its task ends
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while ((writeStages.isEmpty || !writeStages.asScala.forall(stageTasks.containsKey)) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      c
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(writeStages.size == 1, s"stages that wrote rows: $writeStages")
+    assert(stageTasks.get(writeStages.asScala.head) > 1, "the write stage ran on one task")
+    assert(c.files.size == keys)
+    assert(c.files.groupBy(_.split("/").head).values.forall(_.size == 1))
+    assert(c.rows == 3200L)
+    assertRowsReadBack(tdir, c.snapshotId)
+  }
+
+  test("a write that fails mid-job leaves no staging directory and no snapshot") {
+    val boom = udf((x: Long) => if (x == 17L) throw new IllegalStateException("boom") else x)
+    val df = spark.range(0, 100).withColumn("k", (col("id") % 4).cast("string"))
+      .withColumn("id", boom(col("id")))
+    // partitioned: the UDF fails before the shuffle; unpartitioned: it
+    // fails inside the write tasks, after the staging dir exists
+    for (partitionCols <- Seq(Seq("k"), Seq.empty[String])) {
+      val tdir = Files.createTempDirectory("graft_fail_").toString + "/t"
+      intercept[Exception](new graft.sink.HiveParquetWriter().append(df, partitionCols, tdir))
+      assert(!Files.list(Paths.get(tdir)).iterator().asScala
+        .exists(_.getFileName.toString.startsWith("_staging_")), s"partitionCols=$partitionCols")
+      assert(GraftLog.records(tdir).isEmpty)
+    }
+  }
+
   test("batch ingest and streaming micro-batches interleave on one table without losing commits") {
     val root = Files.createTempDirectory("graft_mix_").toString
     val tdir = s"$root/w/t"
@@ -295,6 +354,7 @@ class LakeOpsSpec extends SparkSpec {
     assert(recs.map(_.snapshotId) == Seq(1L, 2L, 3L))
     assert(recs.map(_.op).forall(_ == "append"))
     assert(recs(1).sources == Seq(s"stream:$root/ckpt:0"))
+    recs.foreach(r => assertRowsReadBack(tdir, r.snapshotId))
     assert(LakeOps.readTable(spark, tdir).select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       Seq(1L, 2L, 3L, 11L, 12L, 13L))
   }
@@ -313,6 +373,8 @@ class LakeOpsSpec extends SparkSpec {
 
     val c = LakeOps.compact(spark, tdir)
     assert(c.snapshotId == 3L)
+    assert(c.rows == before.size)
+    assertRowsReadBack(tdir, c.snapshotId)
     val live = GraftLog.liveFiles(tdir, None)
     // one file per partition directory now
     val dirsOf = (fs: Seq[String]) => fs.groupBy(_.split("/").dropRight(1).mkString("/"))
@@ -351,6 +413,8 @@ class LakeOpsSpec extends SparkSpec {
     val s2 = LakeOps.upsert(spark, tdir,
       Seq((2L, "c1", 25L), (7L, "c3", 70L)).toDF("id", "category", "v"),
       keyCols = Seq("id"), partitionCols = Seq("category")).snapshotId
+    assertRowsReadBack(tdir, s2) // rewrite scope: c1 (ids 1, 2) + c3 (id 7)
+    assert(GraftLog.records(tdir).last.rows == 3L)
     val got = LakeOps.readTable(spark, tdir)
       .select(col("id"), col("category").cast("string"), col("v"))
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
@@ -452,6 +516,7 @@ class LakeOpsSpec extends SparkSpec {
     val d1 = LakeOps.delete(spark, tdir, col("id") === 2L || col("v") >= 35L,
       partitionCols = Seq("category"))
     assert(d1.rows == 2)
+    assertRowsReadBack(tdir, d1.snapshotId) // survivors rewritten: id 1
     assert(LakeOps.readTable(spark, tdir).select("id")
       .as[Long].collect().sorted.toSeq == Seq(1L, 3L))
     // untouched partition "x y" carried byte-identical; old snapshot intact

@@ -27,6 +27,8 @@ class StreamingSpec extends SparkSpec {
 
     val back = spark.read.parquet(tableDir)
     assert(back.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 5L))
+    // each micro-batch's commit rows are counted by its own write
+    assert(graft.sink.GraftLog.records(tableDir).map(_.rows).sum == 4L)
     // partition columns flowed through the shared path
     assert(back.filter(col("event_date_day") === "2024-03-15" &&
       col("user_id_bucket") === "10").count() == 1)
