@@ -73,10 +73,11 @@ object LakeOps {
     } catch { case _: Exception => false }
 
   /** Current table state (snapshot-isolated: ignores files on disk that
-    * are not in the live set).
+    * are not in the live set). A table with no snapshot yet reads like
+    * an emptied one, see [[readSnapshot]].
     */
   def readTable(spark: SparkSession, tableDir: String): DataFrame =
-    readSnapshot(spark, tableDir, GraftLog.records(tableDir).map(_.snapshotId).max)
+    readLive(spark, tableDir, GraftLog.liveFiles(tableDir))
 
   /** Time travel: the table as of `snapshotId`.
     *
@@ -90,17 +91,17 @@ object LakeOps {
     * but a real `IcebergWriter` behind the [[LakeWriter]] seam would
     * carry the schema in the log, not the files.
     */
-  def readSnapshot(spark: SparkSession, tableDir: String, snapshotId: Long): DataFrame = {
-    val files = GraftLog.liveFiles(tableDir, Some(snapshotId))
-      .map(f => s"$tableDir/$f")
+  def readSnapshot(spark: SparkSession, tableDir: String, snapshotId: Long): DataFrame =
+    readLive(spark, tableDir, GraftLog.liveFiles(tableDir, Some(snapshotId)))
+
+  private def readLive(spark: SparkSession, tableDir: String, live: Seq[String]): DataFrame =
     // a full-table DELETE legitimately leaves a live set of zero files;
     // parquet() with no paths cannot infer a schema, so surface the
     // empty table as a 0-column empty frame (count/isEmpty work; a
     // schema-carrying log — real Iceberg — would keep the columns)
-    if (files.isEmpty) return spark.emptyDataFrame
+    if (live.isEmpty) spark.emptyDataFrame
     // basePath keeps Hive partition columns when reading explicit files
-    mergedRead(spark, tableDir, files)
-  }
+    else mergedRead(spark, tableDir, live.map(f => s"$tableDir/$f"))
 
   /** Incremental append scan: rows committed AFTER snapshot
     * `fromExclusive` up to and including `toInclusive` — Iceberg's
@@ -211,7 +212,9 @@ object LakeOps {
 
   /** Bin-pack the live set: one file per partition directory, committed
     * as a `rewrite` snapshot. Same rows, fewer files; old snapshots
-    * remain readable until expiry.
+    * remain readable until expiry. An empty live set (no snapshot yet,
+    * or after a full-table delete) is the no-op `CommitInfo(0, Seq.empty,
+    * 0)` (the Q10 rule: no empty snapshots).
     */
   def compact(spark: SparkSession, tableDir: String): CommitInfo = {
     // plan against a FIXED base snapshot; commitReplacing validates the
@@ -220,9 +223,10 @@ object LakeOps {
     // commit aborts with ConcurrentModificationException for re-run)
     val baseId = GraftLog.records(tableDir).map(_.snapshotId).maxOption.getOrElse(0L)
     val live = GraftLog.liveFiles(tableDir, Some(baseId))
+    if (live.isEmpty) return CommitInfo(0, Seq.empty, 0)
     val partitionCols = live.flatMap(_.split("/").dropRight(1).map(_.takeWhile(_ != '=')))
       .distinct
-    val df0 = readSnapshot(spark, tableDir, baseId)
+    val df0 = readLive(spark, tableDir, live)
     // render partition values back to strings (they were path-rendered
     // on write; partition inference may have re-typed them). No
     // coalesce(1): writeFiles' hash repartition already yields one file
@@ -381,7 +385,10 @@ object LakeOps {
   }
 
   /** Delete data files unreachable from the newest `keepLast`
-    * snapshots. Returns the deleted relative paths.
+    * snapshots. Returns the deleted relative paths. Files under a
+    * `_`-prefixed top-level directory are never table data: an
+    * in-flight append's `_staging_<uuid>/` and the `_graft_log` belong
+    * to their writers.
     */
   def expireSnapshots(tableDir: String, keepLast: Int): Seq[String] = {
     val recs = GraftLog.records(tableDir)
@@ -390,7 +397,10 @@ object LakeOps {
     val reachable = keptIds.flatMap(id => GraftLog.liveFiles(tableDir, Some(id))).toSet
     val root = Paths.get(tableDir)
     import scala.jdk.CollectionConverters._
-    val onDisk = Files.walk(root).iterator().asScala
+    // `_` dirs are skipped before the walk: a staging dir may vanish mid-walk
+    val onDisk = Files.list(root).iterator().asScala
+      .filterNot(_.getFileName.toString.startsWith("_"))
+      .flatMap(top => Files.walk(top).iterator().asScala)
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
       .map(p => root.relativize(p).toString.replace("\\", "/")).toSeq
     val doomed = onDisk.filterNot(reachable)

@@ -48,7 +48,10 @@ trait LakeWriter {
   * writes in parallel and all rows of one partition value land in one
   * task — exactly one file per partition directory per append, never
   * every task writing every partition (the many-small-files failure
-  * mode at 1000 executors).
+  * mode at 1000 executors). The staging write goes through
+  * [[PosixLocalFileSystem]], which sets each staged file's and
+  * directory's permissions in-process; without the native Hadoop
+  * library the default local filesystem forks one `chmod` for each.
   */
 final class HiveParquetWriter extends LakeWriter {
 
@@ -90,7 +93,8 @@ object HiveParquetWriter {
     val written = Observation()
     try {
       shuffled.observe(written, count(lit(1)).as("rows"))
-        .write.partitionBy(partitionCols: _*).parquet(staging.toString)
+        .write.options(Map(PosixLocalFileSystem.ImplOption))
+        .partitionBy(partitionCols: _*).parquet(PosixLocalFileSystem.uriOf(staging))
       val rows = written.get("rows").asInstanceOf[Long]
       // an all-empty write may still stage a 0-row schema file — it goes
       // with the staging dir

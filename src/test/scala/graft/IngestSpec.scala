@@ -97,17 +97,28 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(tableDir).count() == 4) // idempotent re-run
   }
 
-  test("an all-malformed input commits no snapshot and leaves no staging directory (Q10)") {
+  /** Ingest one all-malformed file into a fresh table: (result, table dir). */
+  private def ingestAllMalformed(): (graft.ingest.IngestResult, String) = {
     val root = Files.createTempDirectory("graft_bad_").toString
     val tdir = s"$root/w/t"
     val comp = Paths.get(root, "events", "bad")
     Files.createDirectories(comp)
     Files.writeString(comp.resolve("a.json"), "{\"id\": 1,\n not json\n{{{\n")
-    val r = Pipeline.ingest(spark, root, "bad", IngestQueries.fixtureTable, tdir)
+    (Pipeline.ingest(spark, root, "bad", IngestQueries.fixtureTable, tdir), tdir)
+  }
+
+  test("an all-malformed input commits no snapshot and leaves no staging directory (Q10)") {
+    val (r, tdir) = ingestAllMalformed()
     assert(r.commit.isEmpty && r.sourceFiles.size == 1)
     assert(graft.sink.GraftLog.records(tdir).isEmpty)
     assert(!Files.list(Paths.get(tdir)).iterator().asScala
       .exists(_.getFileName.toString.startsWith("_staging_")))
+  }
+
+  test("readTable of a table with no snapshot yet is the empty frame") {
+    val (_, tdir) = ingestAllMalformed()
+    val t = graft.sink.LakeOps.readTable(spark, tdir)
+    assert(t.columns.isEmpty && t.isEmpty)
   }
 
   test("reads of the ingested table prune partitions on the partition column") {

@@ -335,6 +335,76 @@ class LakeOpsSpec extends SparkSpec {
     }
   }
 
+  test("a partitioned append starts no process; files are rw-r--r--, partition dirs rwxr-xr-x, no .crc or _SUCCESS") {
+    val tdir = Files.createTempDirectory("graft_nofork_").toString + "/t"
+    val df = spark.range(0, 3200).withColumn("k", (col("id") % 32).cast("string"))
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    val dump = Files.createTempFile("graft_nofork_", ".jfr")
+    val c = try {
+      recording.start()
+      new graft.sink.HiveParquetWriter().append(df, Seq("k"), tdir)
+    } finally {
+      recording.stop()
+      recording.dump(dump)
+      recording.close()
+    }
+    // only commands naming this table: suites running alongside may fork
+    val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command"))
+      .filter(cmd => cmd != null && cmd.contains(tdir)).toSeq
+    assert(forks.size == 0, s"processes started, e.g. ${forks.headOption.getOrElse("")}")
+    assert(c.files.size == 32)
+    val root = Paths.get(tdir)
+    def mode(p: java.nio.file.Path) =
+      java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    c.files.foreach(f => assert(mode(root.resolve(f)) == "rw-r--r--", f))
+    c.files.map(f => root.resolve(f).getParent).distinct
+      .foreach(d => assert(mode(d) == "rwxr-xr-x", d))
+    val names = Files.walk(root).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!names.exists(n => n.endsWith(".crc") || n == "_SUCCESS"))
+  }
+
+  test("PosixLocalFileSystem.setPermission sets exactly the requested mode bits") {
+    val fs = new graft.sink.PosixLocalFileSystem
+    fs.initialize(fs.getUri, new org.apache.hadoop.conf.Configuration())
+    val f = Files.createTempFile("graft_perm_", ".bin")
+    for ((octal, want) <- Seq("644" -> "rw-r--r--", "755" -> "rwxr-xr-x", "600" -> "rw-------")) {
+      fs.setPermission(new org.apache.hadoop.fs.Path(graft.sink.PosixLocalFileSystem.uriOf(f)),
+        new org.apache.hadoop.fs.permission.FsPermission(Integer.parseInt(octal, 8).toShort))
+      assert(java.nio.file.attribute.PosixFilePermissions.toString(
+        Files.getPosixFilePermissions(f)) == want, octal)
+    }
+  }
+
+  test("expireSnapshots leaves an in-flight append's staged files alone") {
+    val tdir = Files.createTempDirectory("graft_exp_stage_").toString + "/t"
+    val df = spark.range(0, 10).withColumn("k", (col("id") % 2).cast("string"))
+    val c = new graft.sink.HiveParquetWriter().append(df, Seq("k"), tdir)
+    val root = Paths.get(tdir)
+    // a staged file of an append still running, and an unreachable data file
+    val staged = root.resolve("_staging_x/k=0/part-00000-x.parquet")
+    Files.createDirectories(staged.getParent)
+    Files.copy(root.resolve(c.files.head), staged)
+    Files.copy(root.resolve(c.files.head), root.resolve("k=0/orphan.parquet"))
+    assert(LakeOps.expireSnapshots(tdir, keepLast = 1) == Seq("k=0/orphan.parquet"))
+    assert(Files.exists(staged))
+    assert(c.files.forall(f => Files.exists(root.resolve(f))))
+  }
+
+  test("compact on an empty live set commits nothing: no snapshot yet, and after a full-table delete") {
+    val tdir = Files.createTempDirectory("graft_cp_empty_").toString + "/t"
+    assert(LakeOps.compact(spark, tdir) == graft.sink.CommitInfo(0, Seq.empty, 0))
+    assert(GraftLog.records(tdir).isEmpty)
+    val df = spark.range(0, 10).withColumn("k", (col("id") % 2).cast("string"))
+    new graft.sink.HiveParquetWriter().append(df, Seq("k"), tdir)
+    LakeOps.delete(spark, tdir, lit(true), Seq("k"))
+    val snapshots = GraftLog.records(tdir).size
+    assert(LakeOps.compact(spark, tdir) == graft.sink.CommitInfo(0, Seq.empty, 0))
+    assert(GraftLog.records(tdir).size == snapshots)
+  }
+
   test("batch ingest and streaming micro-batches interleave on one table without losing commits") {
     val root = Files.createTempDirectory("graft_mix_").toString
     val tdir = s"$root/w/t"
